@@ -18,8 +18,10 @@ DataFrame plan a user would run against the Iceberg triples table:
 
 Scale notes (all four are built for the 10^12-doc triple table, not the
 test fixture):
-  * entity_degree / cooccurrence_pmi are single-groupBy aggregations —
-    one shuffle each on the grouping key; the PMI marginals are
+  * entity_degree sums 0/1 flag rows of the triples and of three narrow
+    key dedups in ONE groupBy(entity) — no join between the metrics.
+    cooccurrence_pmi is a single-groupBy aggregation — one shuffle on
+    the (subj, obj) key; the PMI marginals are
     PARTITIONED window sums over the (subj, obj) pair counts (|pairs|
     rows, already tiny vs the triple table — and partitioned by subj /
     obj, never a global single-partition window), so no marginal join and
@@ -27,14 +29,24 @@ test fixture):
   * pagerank materializes each iteration through graph._truncate
     (localCheckpoint, or durable .checkpoint with checkpoint_dir), so
     both lineage AND the logical plan stay one-iteration deep — the same
-    discipline as graph.connected_components_star; the dangling-rank
-    mass is a 1-row aggregate broadcast into the update join, so NO
-    per-iteration driver traffic at all. The adjacency (edges ⨝
-    out-degree) is persisted once and reused by every iteration.
+    discipline as graph.connected_components_star. Each node's out-degree
+    rides in the checkpointed rank frame (built once as state(entity, od),
+    od NULL ⇔ dangling), so the dangling-rank mass is a filter + 1-row
+    aggregate over that frame broadcast into the update join — no
+    per-round anti-join against the source set, and NO per-iteration
+    driver traffic at all. The (src, dst, w) adjacency (distinct edges
+    with their triple support) is persisted once and reused by every
+    iteration.
   * khop_neighbors expands only the NEWLY discovered frontier each round
     (classic distributed BFS), so round r joins |frontier_r| rows against
     the edge table, not the whole visited set; min-hop semantics make
     this equivalent to re-expanding everything.
+  * write_analytics writes each product behind its build, in a pool
+    thread: the lazy entity_degree / cooccurrence_pmi plans execute in
+    their writes while pagerank's and khop's rounds run in the caller's
+    thread, so their many small jobs overlap instead of leaving executors
+    idle between them; the writes inherit the caller's job group and
+    local properties.
 
 Determinism: every float the operators expose is rounded to 6 dp at the
 very end (the repo-wide oracle-comparison invariant); all intermediate
@@ -43,6 +55,9 @@ math is float64 on both engines.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,36 +74,59 @@ def write_analytics(
     `out_dir` (one subdir per product) — the read-side sink kg_job's
     `--analytics-dir` drives. `triples` should be the pipeline's
     materialized table (a storage scan), not a live lineage. Returns
-    {product: path}."""
+    {product: path}.
+
+    The products are built one after another in the caller's thread and
+    each is written behind, in a pool thread, as soon as it is built.
+    entity_degree and cooccurrence_pmi are lazy plans, so their whole
+    computation runs in their writes, concurrently with pagerank's and
+    khop's rounds (which execute eagerly in the build); their small jobs
+    fill the cores the rounds leave idle. Each write target is wrapped in
+    inheritable_thread_target, so its jobs keep the caller's job group and
+    local properties. Every write is waited for; a build failure, else the
+    first failed write, is re-raised."""
+    spark = triples.sparkSession
     # ONE persisted (subj, obj) projection shared by every product that
     # only needs the 2-column edge view (pagerank + khop graph derivations)
     # — without it each operator would persist its own copy of the same
     # projection. entity_degree/cooccurrence_pmi need pred/doc_id columns
     # and read the (materialized, column-pruned) triples table directly.
     tr = triples.select("subj", "obj").persist()
-    paths = {}
+    # lazy products first, so their writes overlap the iterative rounds;
+    # operators are looked up at call time (not bound here), so a caller
+    # that wraps the module's functions sees every call
+    builds = {
+        "entity_degree": lambda: entity_degree(triples),
+        "cooccurrence_pmi": lambda: cooccurrence_pmi(triples),
+        "pagerank": lambda: pagerank(
+            tr,
+            iterations=pagerank_iterations,
+            checkpoint_dir=checkpoint_dir,
+            _projected=True,
+        ),
+        "khop_neighbors": lambda: khop_neighbors(
+            tr, checkpoint_dir=checkpoint_dir, _projected=True
+        ),
+    }
+    paths = {name: f"{out_dir.rstrip('/')}/{name}" for name in builds}
     try:
-        # pagerank/khop execute EAGERLY here (node count + per-round
-        # checkpoints), so their construction must sit inside the
-        # try/finally too — a mid-iteration failure must not leak the
-        # persisted projection for the rest of the session
-        products = {
-            "entity_degree": entity_degree(triples),
-            "cooccurrence_pmi": cooccurrence_pmi(triples),
-            "pagerank": pagerank(
-                tr,
-                iterations=pagerank_iterations,
-                checkpoint_dir=checkpoint_dir,
-                _projected=True,
-            ),
-            "khop_neighbors": khop_neighbors(
-                tr, checkpoint_dir=checkpoint_dir, _projected=True
-            ),
-        }
-        for name, df in products.items():
-            path = f"{out_dir.rstrip('/')}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            paths[name] = path
+        # leaving the `with` waits for every submitted write, so `tr` is
+        # released only after no product can still read it. A build runs
+        # inside the try, so a failed round cannot leak `tr` either.
+        with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+            # wrapped at submit time: the write inherits the caller's
+            # local properties as they are now
+            writes = [
+                pool.submit(
+                    inheritable_thread_target(spark)(
+                        build().write.mode("overwrite").parquet
+                    ),
+                    paths[name],
+                )
+                for name, build in builds.items()
+            ]
+        for w in writes:
+            w.result()
     finally:
         tr.unpersist()
     return paths
@@ -146,20 +184,25 @@ def entity_degree(triples: DataFrame) -> DataFrame:
       n_preds — distinct predicates the entity participates in (either side)
       n_docs — distinct documents supporting the entity (either side)
 
-    Formulation: per-metric distinct-then-count aggregations joined on
-    `entity` — NOT a single multi-count-distinct agg. Spark expands a
-    multi-count-distinct through the Expand operator (~5× row
-    multiplication BEFORE the partial aggregation), which at a 10^12-row
-    triple table turns the hottest entities' pre-shuffle volume into the
-    bottleneck. Here every distinct is a map-side-combinable dedup on its
-    own narrow key, each feeding a tiny per-entity count, and the final
-    joins are |entities|-sized (AQE broadcasts at test SF). The cost is
-    four column-pruned passes over `sides` instead of one — callers are
-    expected to hand in a MATERIALIZED triples table (the pipeline's
-    Parquet/Iceberg product) so each pass is a ≤4-column storage scan,
-    the same contract as cooccurrence_pmi's documented re-scan. Inner
-    joins are lossless: every entity appearing in `sides` appears in all
-    four aggregates (nbr/pred/doc_id are non-null by triple construction)."""
+    Formulation: per-metric distinct-then-count, NOT a single
+    multi-count-distinct agg. Spark expands a multi-count-distinct through
+    the Expand operator (~5× row multiplication BEFORE the partial
+    aggregation), which at a 10^12-row triple table turns the hottest
+    entities' pre-shuffle volume into the bottleneck. Here every distinct
+    is a map-side-combinable dedup on its own narrow key; the triple rows
+    and the three deduped key sets each become one 0/1 flag row per
+    count, and ONE groupBy(entity) sums their union (partial sums before
+    its shuffle) — no join, so no per-metric re-shuffle on `entity`. The
+    cost is four column-pruned passes over `sides` instead of one —
+    callers are expected to hand in a MATERIALIZED triples table (the
+    pipeline's Parquet/Iceberg product) so each pass is a ≤4-column
+    storage scan, the same contract as cooccurrence_pmi's documented
+    re-scan.
+
+    NULLs follow SQL's COUNT(DISTINCT …): a NULL nbr/pred/doc_id is not
+    counted (its key is dropped before the dedup), so an entity whose
+    keys are all NULL keeps its row with count 0; a NULL subj/obj forms
+    one NULL entity row, as GROUP BY does."""
     sides = triples.select(
         F.col("subj").alias("entity"),
         F.lit(True).alias("is_out"),
@@ -175,48 +218,44 @@ def entity_degree(triples: DataFrame) -> DataFrame:
             "doc_id",
         )
     )
-    base = sides.groupBy("entity").agg(
-        F.sum(F.when(F.col("is_out"), 1).otherwise(0)).alias("out_triples"),
-        F.sum(F.when(F.col("is_out"), 0).otherwise(1)).alias("in_triples"),
+    counts = (
+        "out_triples",
+        "in_triples",
+        "out_neighbors",
+        "in_neighbors",
+        "n_preds",
+        "n_docs",
     )
-    nbrs = (
-        sides.select("entity", "is_out", "nbr")
-        .distinct()
-        .groupBy("entity")
-        .agg(
-            F.sum(F.when(F.col("is_out"), 1).otherwise(0)).alias(
-                "out_neighbors"
-            ),
-            F.sum(F.when(F.col("is_out"), 0).otherwise(1)).alias(
-                "in_neighbors"
-            ),
+    is_out = F.when(F.col("is_out"), 1).otherwise(0)
+    is_in = F.when(F.col("is_out"), 0).otherwise(1)
+
+    def flags(df: DataFrame, **set_to) -> DataFrame:
+        # one row per input row: the named counts get their flag, the rest 0
+        return df.select(
+            "entity", *(set_to.get(c, F.lit(0)).alias(c) for c in counts)
         )
-    )
-    preds = (
-        sides.select("entity", "pred")
-        .distinct()
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("n_preds"))
-    )
-    docs = (
-        sides.select("entity", "doc_id")
-        .distinct()
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
+
+    def distinct_keys(*cols: str) -> DataFrame:
+        # COUNT(DISTINCT x) ignores NULL x: drop NULL keys before the dedup
+        return (
+            sides.where(F.col(cols[-1]).isNotNull())
+            .select("entity", *cols)
+            .distinct()
+        )
+
     return (
-        base.join(nbrs, "entity")
-        .join(preds, "entity")
-        .join(docs, "entity")
-        .select(
-            "entity",
-            "out_triples",
-            "in_triples",
-            "out_neighbors",
-            "in_neighbors",
-            "n_preds",
-            "n_docs",
+        flags(sides, out_triples=is_out, in_triples=is_in)
+        .unionByName(
+            flags(
+                distinct_keys("is_out", "nbr"),
+                out_neighbors=is_out,
+                in_neighbors=is_in,
+            )
         )
+        .unionByName(flags(distinct_keys("pred"), n_preds=F.lit(1)))
+        .unionByName(flags(distinct_keys("doc_id"), n_docs=F.lit(1)))
+        .groupBy("entity")
+        .agg(*(F.sum(c).alias(c) for c in counts))
     )
 
 
@@ -313,15 +352,20 @@ def pagerank(
     Returns (entity, rank) with rank rounded to 6 dp. Total rank mass is
     conserved at 1.0 per iteration (up to float rounding).
 
-    Scale: adjacency persisted once; each iteration is one job (contrib
-    join + groupBy-sum + rank-update join, dangling mass folded in as a
-    broadcast 1-row aggregate) — nothing round-trips the driver. Each
-    round's rank frame goes through graph._truncate (localCheckpoint, or
-    a durable .checkpoint() when checkpoint_dir is given): persist alone
-    keeps the LOGICAL plan growing — every round re-embeds all previous
-    rounds ~3× (contribs + dangling + update), and Catalyst re-analysis
-    goes exponential in the iteration count (measured: 61 s → 424 s at
-    5 iterations on the test fixture)."""
+    Scale: the adjacency (src, dst, w) is persisted once. Each node's
+    out-degree rides in the rank frame: state(entity, od) — the node set
+    left-joined to the out-degree, od NULL ⇔ dangling — is built and
+    checkpointed once, and every round carries od along with the rank.
+    So the dangling mass is a filter + 1-row sum over the rank frame
+    (broadcast into the update join), with no per-round anti-join against
+    the source set and no separate node cache; nothing round-trips the
+    driver. Each round's rank frame goes through graph._truncate
+    (localCheckpoint, or a durable .checkpoint() when checkpoint_dir is
+    given): persist alone keeps the LOGICAL plan growing — every round
+    re-embeds all previous rounds ~3× (contribs + dangling + update), and
+    Catalyst re-analysis goes exponential in the iteration count
+    (measured: 61 s → 424 s at 5 iterations on the test fixture). The
+    caches are released on every exit path, a failed round included."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     # one persisted 2-column projection feeds BOTH the edge and node
@@ -330,108 +374,90 @@ def pagerank(
     # gazetteer chain, not a scan). A caller-shared projection
     # (_projected=True) skips the local persist.
     tr = triples if _projected else triples.select("subj", "obj").persist()
-    nodes = _entities(tr)
-    # adjacency carries the RAW out-degree/weights; per-edge contributions
-    # are aggregated as sum(rank / od) (or sum(rank * w / od) weighted) —
-    # the exact IEEE-double op sequences the DuckDB oracles use
-    # (SUM(r.rank / o.od), SUM(r.rank * e.w / o.od)). A precomputed 1/od
-    # weight would differ by up to 1 ulp per term and can flip a 6-dp
-    # rounding boundary on large graphs.
-    if weighted:
-        edges = (
+    cached = [] if _projected else [tr]
+    try:
+        # one adjacency for both modes: the distinct edges with their
+        # triple support w (read only when weighted)
+        adj = (
             tr.where(F.col("subj") != F.col("obj"))
-            .groupBy("subj", "obj")
+            .groupBy(F.col("subj").alias("src"), F.col("obj").alias("dst"))
             .agg(F.count(F.lit(1)).cast("double").alias("w"))
+            .persist()
         )
-        outdeg = edges.groupBy("subj").agg(F.sum("w").alias("od"))
-        adj_cols = [
-            F.col("subj").alias("src"),
-            F.col("obj").alias("dst"),
-            "w",
-            "od",
-        ]
-    else:
-        edges = _directed_edges(tr)
-        outdeg = edges.groupBy("subj").agg(
-            F.count(F.lit(1)).cast("double").alias("od")
+        cached.append(adj)
+        od = F.sum("w") if weighted else F.count(F.lit(1)).cast("double")
+        outdeg = adj.groupBy(F.col("src").alias("entity")).agg(od.alias("od"))
+        state = _truncate(
+            _entities(tr).join(outdeg, "entity", "left"), checkpoint_dir
         )
-        adj_cols = [
-            F.col("subj").alias("src"),
-            F.col("obj").alias("dst"),
-            "od",
-        ]
-    adj = edges.join(outdeg, "subj").select(*adj_cols).persist()
-    nodes = nodes.persist()
-    n = nodes.count()  # bounded driver scalar: |V|
-    if n == 0:
-        adj.unpersist()
-        nodes.unpersist()
-        if not _projected:
-            tr.unpersist()
-        return triples.sparkSession.createDataFrame(
-            [], "entity string, rank double"
-        )
-    ranks = _truncate(
-        nodes.select("entity", F.lit(1.0 / n).alias("rank")), checkpoint_dir
-    )
-    src_set = adj.select(F.col("src").alias("entity")).distinct()
-    for _ in range(iterations):
-        # dangling mass: rank held by nodes with no outgoing edge — a
-        # 1-row aggregate broadcast into the update join, so an iteration
-        # is ONE job and nothing round-trips through the driver
-        dangling = ranks.join(src_set, "entity", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
+        n = state.count()  # bounded driver scalar: |V|
+        if n == 0:
+            return triples.sparkSession.createDataFrame(
+                [], "entity string, rank double"
+            )
+        ranks = state.withColumn("rank", F.lit(1.0 / n))
+        # contributions use the RAW out-degree/weights: sum(rank / od) (or
+        # sum(rank * w / od) weighted) — the exact IEEE-double op sequences
+        # the DuckDB oracles use (SUM(r.rank / o.od), SUM(r.rank * e.w /
+        # o.od)). A precomputed 1/od weight would differ by up to 1 ulp per
+        # term and can flip a 6-dp rounding boundary on large graphs.
         contrib_term = (
             F.col("rank") * F.col("w") / F.col("od")
             if weighted
             else F.col("rank") / F.col("od")
         )
-        contribs = (
-            adj.join(ranks, adj.src == ranks.entity)
-            .groupBy("dst")
-            .agg(F.sum(contrib_term).alias("c"))
-        )
-        new_ranks = (
-            nodes.join(contribs, nodes.entity == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "entity",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
+        for _ in range(iterations):
+            # dangling mass: rank held by nodes with no outgoing edge — a
+            # 1-row aggregate broadcast into the update join, so an
+            # iteration is ONE job and nothing round-trips the driver
+            dangling = ranks.where(F.col("od").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
             )
-        )
-        prev = ranks
-        ranks = _truncate(new_ranks, checkpoint_dir)
-        if tol is not None:
-            # L1 delta vs the previous round — one job, one scalar back
-            l1 = (
-                ranks.alias("a")
-                .join(prev.alias("b"), "entity")
-                .agg(
-                    F.coalesce(
-                        F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))),
-                        F.lit(0.0),
-                    ).alias("l1")
+            contribs = (
+                adj.join(ranks, adj.src == ranks.entity)
+                .groupBy(F.col("dst").alias("entity"))
+                .agg(F.sum(contrib_term).alias("c"))
+            )
+            new_ranks = (
+                ranks.select("entity", "od")
+                .join(contribs, "entity", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "entity",
+                    "od",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.col("dm") / F.lit(float(n))
+                        )
+                    ).alias("rank"),
                 )
-                .collect()[0]["l1"]
             )
-            if l1 <= tol:
-                break
-    out = ranks.select("entity", F.round("rank", 6).alias("rank"))
-    # `out` reads the final round's checkpointed blocks (plan already cut
-    # from the pipeline lineage), so the upstream caches can go now
-    adj.unpersist()
-    nodes.unpersist()
-    if not _projected:
-        tr.unpersist()
-    return out
+            prev = ranks
+            ranks = _truncate(new_ranks, checkpoint_dir)
+            if tol is not None:
+                # L1 delta vs the previous round — one job, one scalar back
+                l1 = (
+                    ranks.alias("a")
+                    .join(prev.alias("b"), "entity")
+                    .agg(
+                        F.coalesce(
+                            F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))),
+                            F.lit(0.0),
+                        ).alias("l1")
+                    )
+                    .collect()[0]["l1"]
+                )
+                if l1 <= tol:
+                    break
+        # reads the final round's checkpointed blocks (plan already cut
+        # from the pipeline lineage), so the caches can go on return
+        return ranks.select("entity", F.round("rank", 6).alias("rank"))
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def khop_neighbors(
@@ -460,26 +486,33 @@ def khop_neighbors(
     # the upstream triple lineage; _projected=True means the caller
     # already persisted the (subj, obj) projection and owns its lifetime
     tr = triples if _projected else triples.select("subj", "obj").persist()
-    edges = _directed_edges(tr).persist()
-    seeds = (
-        _entities(tr)
-        .orderBy("entity")
-        .limit(n_seeds)
-        .select("entity", F.lit(0).alias("hops"))
-    )
-    visited = _truncate(seeds, checkpoint_dir)
-    frontier = visited.select("entity")
-    for hop in range(1, k + 1):
-        discovered = (
-            edges.join(frontier, edges.subj == frontier.entity)
-            .select(F.col("obj").alias("entity"))
-            .distinct()
-            .join(visited.select("entity"), "entity", "left_anti")
-            .select("entity", F.lit(hop).alias("hops"))
+    cached = [] if _projected else [tr]
+    try:
+        edges = _directed_edges(tr).persist()
+        cached.append(edges)
+        seeds = (
+            _entities(tr)
+            .orderBy("entity")
+            .limit(n_seeds)
+            .select("entity", F.lit(0).alias("hops"))
         )
-        visited = _truncate(visited.unionByName(discovered), checkpoint_dir)
-        frontier = visited.where(F.col("hops") == hop).select("entity")
-    edges.unpersist()
-    if not _projected:
-        tr.unpersist()
-    return visited.select("entity", F.col("hops").cast("int").alias("hops"))
+        visited = _truncate(seeds, checkpoint_dir)
+        frontier = visited.select("entity")
+        for hop in range(1, k + 1):
+            discovered = (
+                edges.join(frontier, edges.subj == frontier.entity)
+                .select(F.col("obj").alias("entity"))
+                .distinct()
+                .join(visited.select("entity"), "entity", "left_anti")
+                .select("entity", F.lit(hop).alias("hops"))
+            )
+            visited = _truncate(
+                visited.unionByName(discovered), checkpoint_dir
+            )
+            frontier = visited.where(F.col("hops") == hop).select("entity")
+        return visited.select(
+            "entity", F.col("hops").cast("int").alias("hops")
+        )
+    finally:
+        for df in cached:
+            df.unpersist()

@@ -87,6 +87,44 @@ def _config_token(args, alias) -> str:
     ).hexdigest()[:16]
 
 
+def write_analytics_durable(
+    spark: SparkSession, triples, analytics_dir: str, pagerank_iterations: int
+) -> None:
+    """kg_analytics.write_analytics with durable per-round checkpoints for
+    the iterative operators (pagerank/khop): localCheckpoint blocks die
+    with an executor, and kg_job already owns a durable work area — reuse
+    it so an executor loss mid-analytics recomputes from storage, not
+    fails. Spark never deletes reliable-checkpoint files itself
+    (cleanCheckpoints defaults false), so the dir is removed once the
+    products are materialized — otherwise every run accumulates |V|-sized
+    round snapshots inside the analytics output forever. The delete goes
+    through the Hadoop FileSystem of the path, so it works for HDFS/S3
+    URIs as well as local paths. A failed delete only warns on stderr: it
+    must neither hide an analytics error nor fail a run whose products
+    are written."""
+    from bioner_spark.kg_analytics import write_analytics
+    from bioner_spark.pipeline import _hadoop_fs
+
+    ckpt_dir = f"{analytics_dir.rstrip('/')}/_checkpoints"
+    try:
+        write_analytics(
+            triples,
+            analytics_dir,
+            pagerank_iterations=pagerank_iterations,
+            checkpoint_dir=ckpt_dir,
+        )
+    finally:
+        try:
+            fs, jpath = _hadoop_fs(spark, ckpt_dir)
+            fs.delete(jpath, True)
+        except Exception as exc:  # cleanup is best effort
+            print(
+                f"warning: could not delete analytics checkpoint dir "
+                f"{ckpt_dir} ({type(exc).__name__}: {exc})",
+                file=sys.stderr,
+            )
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="pages Parquet path")
@@ -285,29 +323,10 @@ def main(argv: list[str] | None = None) -> None:
         # is run_checkpointed's materialized Parquet, so the iterative
         # operators' re-scans hit storage, not the pipeline lineage; each
         # product lands as its own Parquet table for downstream query.
-        from bioner_spark.kg_analytics import write_analytics
-
         ta = time.time()
-        # durable per-round checkpoints for the iterative operators
-        # (pagerank/khop): localCheckpoint blocks die with an executor,
-        # and kg_job already owns a durable work area — reuse it so an
-        # executor loss mid-analytics recomputes from storage, not fails.
-        # Spark never deletes reliable-checkpoint files itself
-        # (cleanCheckpoints defaults false), so remove the dir once the
-        # products are materialized — otherwise every run accumulates
-        # |V|-sized round snapshots inside the analytics output forever.
-        ckpt_dir = f"{args.analytics_dir.rstrip('/')}/_checkpoints"
-        try:
-            write_analytics(
-                result.triples,
-                args.analytics_dir,
-                pagerank_iterations=args.pagerank_iterations,
-                checkpoint_dir=ckpt_dir,
-            )
-        finally:
-            import shutil
-
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+        write_analytics_durable(
+            spark, result.triples, args.analytics_dir, args.pagerank_iterations
+        )
         analytics_sec = round(time.time() - ta, 3)
 
     print(

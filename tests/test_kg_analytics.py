@@ -330,3 +330,166 @@ def test_khop_min_hop_on_diamond(spark):
         for r in khop_neighbors(t, k=2, n_seeds=2).collect()
     }
     assert got == {"A": 0, "B": 0, "C": 1, "D": 1}
+
+
+def _ring(spark):
+    # A→B→C→A plus C→D (D dangling): every product is non-empty and both
+    # iterative operators run several rounds
+    return _triples(spark, [
+        ("A", "p", "B", 1, 0),
+        ("B", "p", "C", 1, 1),
+        ("C", "p", "A", 2, 0),
+        ("C", "p", "D", 2, 1),
+    ])
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank", "khop_neighbors", "write_analytics"]
+)
+def test_caches_released_when_a_round_fails(spark, tmp_path, monkeypatch, op):
+    """A failure in the middle of the rounds releases every cache the call
+    made (pagerank's adjacency, khop's edges, the shared projection of
+    write_analytics) and reaches the caller. Durable checkpoints keep the
+    rounds that did run out of the persistent-RDD registry, so the count
+    sees only the caches."""
+    import itertools
+
+    from bioner_spark import kg_analytics
+
+    real = kg_analytics._truncate
+    calls = itertools.count(1)
+
+    def fail_third(df, checkpoint_dir):
+        if next(calls) == 3:
+            raise RuntimeError("injected round failure")
+        return real(df, checkpoint_dir)
+
+    monkeypatch.setattr(kg_analytics, "_truncate", fail_third)
+    t = _ring(spark)
+    ckpt = str(tmp_path / "ckpt")
+    run = {
+        "pagerank": lambda: kg_analytics.pagerank(
+            t, iterations=5, checkpoint_dir=ckpt
+        ),
+        "khop_neighbors": lambda: kg_analytics.khop_neighbors(
+            t, k=3, checkpoint_dir=ckpt
+        ),
+        "write_analytics": lambda: kg_analytics.write_analytics(
+            t, str(tmp_path / "out"), checkpoint_dir=ckpt
+        ),
+    }[op]
+    registry = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(registry().keySet())
+    with pytest.raises(RuntimeError, match="injected round failure"):
+        run()
+    # ids, not a size: the context cleaner may free older RDDs meanwhile
+    assert set(registry().keySet()) <= before
+
+
+def test_write_analytics_sets_checkpoint_dir_once(spark, tmp_path):
+    """pagerank and khop both truncate through `checkpoint_dir`; it is
+    set once, so every round lands in exactly one UUID subdir."""
+    from bioner_spark.kg_analytics import write_analytics
+
+    d = tmp_path / "ckpt"
+    write_analytics(
+        _ring(spark), str(tmp_path / "out"), pagerank_iterations=2,
+        checkpoint_dir=str(d),
+    )
+    assert len([p for p in d.iterdir() if p.is_dir()]) == 1
+
+
+def test_write_analytics_jobs_keep_callers_job_group(spark, tmp_path):
+    """The product writes run in pool threads that inherit the caller's
+    job group: every job lands in it and none runs without a group."""
+    from bioner_spark.kg_analytics import write_analytics
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "kg_analytics_job_group_test"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "write_analytics job-group inheritance")
+    try:
+        write_analytics(_ring(spark), str(tmp_path), pagerank_iterations=2)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup(group)
+    # subset, not equality: the tracker may evict old jobs meanwhile
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_entity_degree_null_law_matches_duckdb(spark):
+    """NULL subj/obj/pred/doc_id follow the oracle's COUNT(DISTINCT …) and
+    GROUP BY: NULL keys are not counted, an entity whose keys are all NULL
+    keeps its row with count 0, and NULL entities form one NULL row."""
+    import duckdb
+    import pyarrow as pa
+
+    from scripts.verify_kg_scale import DEGREE_SQL
+
+    rows = [
+        ("A", "treats", "B", 1, 0),
+        ("A", None, "B", 2, 0),  # NULL pred
+        ("A", "causes", "C", None, 1),  # NULL doc_id
+        (None, "treats", "B", 3, 0),  # NULL subj: NULL entity, NULL nbr of B
+        ("C", "treats", None, 4, 0),  # NULL obj
+        ("D", None, "D", None, 0),  # D's only pred and doc_id are NULL
+        (None, None, None, None, 1),
+    ]
+    schema = pa.schema([
+        ("subj", pa.string()), ("pred", pa.string()), ("obj", pa.string()),
+        ("doc_id", pa.int64()), ("sentence_id", pa.int32()),
+    ])
+    con = duckdb.connect()
+    try:
+        con.register("triples", pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        ))
+        want = con.execute(DEGREE_SQL).fetchall()
+    finally:
+        con.close()
+    got = [tuple(r) for r in entity_degree(_triples(spark, rows)).collect()]
+
+    def key(r):
+        return (r[0] is not None, r[0] or "")
+
+    assert sorted(got, key=key) == sorted(want, key=key)
+    assert any(r[0] is None for r in got)
+
+
+def test_kg_job_analytics_removes_uri_checkpoint_dir(spark, tmp_path):
+    """kg_job's durable-checkpoint analytics removes its checkpoint dir
+    through the path's Hadoop FileSystem, so a URI (here file://) is
+    really deleted, not silently skipped."""
+    from scripts.kg_job import write_analytics_durable
+
+    out = tmp_path / "analytics"
+    write_analytics_durable(spark, _ring(spark), out.as_uri(), 2)
+    assert sorted(p.name for p in out.iterdir()) == [
+        "cooccurrence_pmi", "entity_degree", "khop_neighbors", "pagerank",
+    ]
+
+
+def test_kg_job_analytics_cleanup_failure_only_warns(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A checkpoint-dir delete that raises neither fails a run whose
+    products are written nor replaces the analytics error."""
+    from bioner_spark import kg_analytics, pipeline
+    from scripts.kg_job import write_analytics_durable
+
+    def no_fs(spark, path):
+        raise OSError("injected cleanup failure")
+
+    monkeypatch.setattr(pipeline, "_hadoop_fs", no_fs)
+    out = tmp_path / "analytics"
+    write_analytics_durable(spark, _ring(spark), str(out), 2)
+    assert (out / "pagerank").is_dir()
+    assert "injected cleanup failure" in capsys.readouterr().err
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected analytics failure")
+
+    monkeypatch.setattr(kg_analytics, "write_analytics", failing)
+    with pytest.raises(RuntimeError, match="injected analytics failure"):
+        write_analytics_durable(spark, _ring(spark), str(out), 2)
